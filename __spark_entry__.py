@@ -2694,11 +2694,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # went to re-checking changed driver-rowed ops instead
 # (semantic_decontamination r4, ann_ivf_topk r1), which is what the
 # change-window rule demands.
+# Two more changed driver-rowed ops take the slots of the last two
+# judge-r4 entries (maximal_independent_set, densest_subgraph; both keep
+# their judge-r4 evidence): stream_lpa (stream_community_detection's
+# materialization points and metrics job changed; labels unchanged) and
+# actor_scc (its shared SCC step driver gained the forward_delta
+# parameter; default-inert on the gate path, but a changed operator
+# function is windowed by the same rule, with no exemption).
 _WINDOW_FIRST = [
     "semantic_decontamination",
     "ann_ivf_topk",
     "stream_dedup_pairs",
     "stream_novelty",
+    "stream_lpa",
+    "actor_scc",
     "repetition_stats",
     "prompt_response_pairs",
     "context_windows",
@@ -2743,8 +2752,6 @@ _WINDOW_FIRST = [
     "dpo_pairs",
     "conv_novelty",
     "dsir_importance",
-    "maximal_independent_set",
-    "densest_subgraph",
 ]
 
 # Most recent value-level verification per entry (VERDICT r3 #6):
@@ -2852,6 +2859,8 @@ _CHANGED_SINCE_VERIFIED = [
     "ann_ivf_topk",              # r5 nprobe multi-probe parameter
     "stream_dedup_pairs",        # r5 delta-append pairs_cum fold snapshots
     "stream_novelty",            # r5 delta-append out_cum fold snapshots
+    "stream_lpa",                # seed-label checkpoint, AQE-on state, fused metrics job
+    "actor_scc",                 # r5 forward_delta plumbing in the shared SCC step driver
 ]
 
 assert set(_CHANGED_SINCE_VERIFIED) <= set(_WINDOW_FIRST[:50]), (

@@ -19,11 +19,28 @@ per batch:
      log sink S6 (src/approximate_community_detection.cpp:47-55) — to a
      JSONL lineage file and keep it in the result.
 
-Per-batch state is localCheckpoint-truncated; with ``checkpoint_dir``
-set, every batch additionally writes durable (edges, labels) parquet
-snapshots + a per-partition lineage row, and ``resume=True`` restarts a
-killed run from the latest complete batch (north_rule "any run resumes
-mid-iteration").
+Where a :func:`stream_community_detection` call materializes — every other
+plan is evaluated inside one of these jobs:
+
+  * the ``edge_seq`` bounds of the stream (one scalar collect per call);
+  * per batch, the accumulated EDGE STATE (input edges + the batch);
+  * per batch, the SEED LABELS: new vertices as singletons, touched
+    communities disbanded (LPA variants only; ``gain`` passes the lazy
+    seed to Louvain);
+  * per batch with ``locality_radius``, the ball's edge slice;
+  * per batch, EACH LPA superstep (a superstep reads its labels ~3×);
+  * per batch, ONE metrics job: ``edges_seen``, ``modularity`` and
+    ``n_communities`` from a single aggregation over the labeled edge
+    table (plus the truth metrics when ``truth`` is given).
+
+The inputs ``initial_edges`` / ``initial_labels`` are not checkpointed:
+each is read once, inside a plan that is materialized right away, so the
+caller may release them after the call returns. State checkpoints are
+``stats_reset_checkpoint`` (AQE on; the state has no key to preserve)
+through a ``LineageTruncator``. With ``checkpoint_dir`` set, every batch
+additionally writes durable (edges, labels) parquet snapshots + a
+per-partition lineage row, and ``resume=True`` restarts a killed run from
+the latest complete batch (north_rule "any run resumes mid-iteration").
 """
 
 from __future__ import annotations
@@ -36,12 +53,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.metrics import modularity
 from ..operators.graph_ops import add_edges, symmetrize
 from ..operators.label_propagation import lpa_superstep
 from ..plans.iterate import (
     LineageTruncator,
     parquet_partition_lineage,
+    stats_reset_checkpoint,
     unpersist_checkpoint,
 )
 
@@ -138,13 +155,18 @@ class FoldCheckpointer:
       silently drop rows, while trailing incomplete batches are simply
       replayed.
 
-    ``manifest`` (ADVICE r4): a small JSON-serializable dict of run
-    parameters (n_batches, boundaries, thresholds, input fingerprint).
-    The first persist writes ``<run>/manifest.json``; any later persist
-    or resume whose manifest differs raises ValueError instead of
+    ``manifest.json``: the first persist writes ``<run>/manifest.json``
+    holding every table's LAYOUT (full or delta) and the caller's
+    ``manifest`` — a small JSON-serializable dict of run parameters
+    (n_batches, boundaries, thresholds; ADVICE r4).  Any later persist or
+    resume whose layout or parameters differ raises ValueError instead of
     silently folding a DIFFERENT stream onto the old run's state (e.g.
     resuming with changed batch boundaries would return the old run's
-    final state for every "already done" batch)."""
+    final state for every "already done" batch), and a run with
+    ``delta_tables`` refuses ``batch=*`` directories that have no
+    manifest (their layout is unknown; a delta read-back would union full
+    snapshots).  The input data itself is NOT fingerprinted: resume
+    assumes the same input as the run that wrote the checkpoint."""
 
     def __init__(
         self,
@@ -166,10 +188,11 @@ class FoldCheckpointer:
         return os.path.join(self.dir, f"batch={b}", table)
 
     def _check_or_write_manifest(self, write: bool) -> None:
-        if self.manifest is None:
-            return
+        layout = {t: "delta" if t in self.delta_tables else "full" for t in self.tables}
         # JSON round-trip so tuples/ints compare equal to what disk holds
-        mine = json.loads(json.dumps(self.manifest, sort_keys=True))
+        mine = json.loads(
+            json.dumps({"layout": layout, "params": self.manifest}, sort_keys=True)
+        )
         path = os.path.join(self.dir, "manifest.json")
         if os.path.exists(path):
             with open(path) as fh:
@@ -178,9 +201,17 @@ class FoldCheckpointer:
                 raise ValueError(
                     f"FoldCheckpointer manifest mismatch under {self.dir}: "
                     f"on disk {on_disk!r} vs this run {mine!r} — refusing to "
-                    "resume/extend a checkpoint written by a run with "
-                    "different parameters or inputs"
+                    "resume/extend a checkpoint written with a different "
+                    "table layout or different parameters"
                 )
+        elif self.delta_tables and self._existing_batches():
+            # no record of the layout: these may be FULL snapshots, and a
+            # delta read-back would union them into duplicated rows
+            raise ValueError(
+                f"FoldCheckpointer: batch directories under {self.dir} have no "
+                "manifest.json, so their layout (full or delta) is unknown — "
+                "refusing to read them back as deltas"
+            )
         elif write:
             os.makedirs(self.dir, exist_ok=True)
             tmp = path + ".tmp"
@@ -267,9 +298,34 @@ class StreamResult:
 
 
 def _batch_metrics(edges: DataFrame, labels: DataFrame, truth: DataFrame | None) -> dict:
+    """edges_seen, modularity and n_communities in ONE job: per-community
+    (e_in2, deg) over the labeled edge table, then one global row —
+    Q = Σe_in2/2m − Σdeg²/(2m)², the expanded form of
+    functions/metrics.modularity. Every labeled vertex has an edge (labels
+    are derived from the edge table's vertices), so the community groups
+    are exactly the distinct labels and Σdeg is the table's 2m."""
+    ls = labels.select(F.col("id").alias("src"), F.col("label").alias("sl"))
+    ld = labels.select(F.col("id").alias("dst"), F.col("label").alias("dl"))
+    per = (
+        edges.join(ls, "src")
+        .join(ld, "dst")
+        .groupBy("sl")
+        .agg(
+            F.sum(F.when(F.col("sl") == F.col("dl"), F.col("weight")).otherwise(0)).alias("e_in2"),
+            F.sum("weight").alias("deg"),
+        )
+    )
+    tot = per.agg(
+        F.sum("e_in2").cast("double").alias("e_in2"),
+        F.sum("deg").alias("two_m"),
+        F.sum(F.col("deg").cast("double") ** 2).alias("deg_sq"),
+        F.count("*").alias("n_communities"),
+    ).collect()[0]
+    two_m = tot.two_m or 0
     row: dict = {
-        "modularity": float(modularity(edges, labels).collect()[0][0]),
-        "n_communities": labels.select("label").distinct().count(),
+        "edges_seen": int(two_m / 2),
+        "modularity": tot.e_in2 / two_m - tot.deg_sq / float(two_m) ** 2 if two_m else 0.0,
+        "n_communities": tot.n_communities,
     }
     if truth is not None:
         from ..functions.metrics import edge_classification_accuracy, max_jaccard_sum
@@ -317,14 +373,16 @@ def stream_community_detection(
         raise ValueError("empty edge stream")
     span = (bounds.hi - bounds.lo + 1) / n_batches
 
-    truncate = LineageTruncator(spark, prefix="stream")
+    # the state is unkeyed: AQE-on checkpoints let small batches coalesce
+    # their shuffle partitions instead of pinning spark.sql.shuffle.partitions
+    truncate = LineageTruncator(spark, prefix="stream", checkpoint_fn=stats_reset_checkpoint)
     ckpt = StreamCheckpointer(spark, checkpoint_dir, run_id) if checkpoint_dir else None
     edges = (
         initial_edges
         if initial_edges is not None
         else spark.createDataFrame([], "src long, dst long, weight long")
-    ).localCheckpoint(eager=True)
-    labels = initial_labels.localCheckpoint(eager=True) if initial_labels is not None else None
+    )
+    labels = initial_labels
     metrics: list[dict] = []
 
     start_batch = 0
@@ -407,6 +465,9 @@ def stream_community_detection(
                 step_edges = edges.join(
                     ball.withColumnRenamed("id", "src"), "src", "left_semi"
                 ).localCheckpoint(eager=True)
+            # materialize the seed once: the first superstep reads it ~3×,
+            # and each read would re-run the new-vertex + disband joins
+            labels = truncate(labels)
             for _ in range(supersteps_per_batch):
                 # truncate EVERY superstep: lpa_superstep references the
                 # label plan ~3×, so an unchecked chain grows as 3^steps
@@ -417,7 +478,6 @@ def stream_community_detection(
             edges, labels = ckpt.persist(b, edges, labels)
         row = {
             "batch": b,
-            "edges_seen": int(edges.agg(F.sum("weight") / 2).collect()[0][0] or 0),
             "wall_sec": round(time.monotonic() - t0, 4),
             **_batch_metrics(edges, labels, truth),
         }

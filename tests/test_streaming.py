@@ -618,3 +618,85 @@ def test_fold_checkpointer_empty_delta_preserves_schema(spark, tmp_path):
     assert sorted(map(tuple, out1.collect())) == [(1, 2.0)]
     snap, nxt = ck.resume_state()
     assert nxt == 2 and snap["t"].count() == 1
+
+
+def test_fold_checkpointer_refuses_delta_read_of_unversioned_dirs(spark, tmp_path):
+    """ADVICE: batch dirs without a manifest may hold FULL cumulative
+    snapshots; a delta_tables checkpointer must refuse them instead of
+    unioning them into duplicated rows, and a recorded full layout must
+    not be resumed as delta."""
+    import os
+
+    import pytest
+
+    from sbm_communitydetection_spark.streaming.stream_driver import FoldCheckpointer
+
+    full = FoldCheckpointer(spark, str(tmp_path), "r", ("t",))
+    for b, rows in enumerate([[(1,)], [(1,), (2,)]]):
+        full.persist(b, t=spark.createDataFrame(rows, "a long"))
+    with pytest.raises(ValueError, match="manifest mismatch"):
+        FoldCheckpointer(spark, str(tmp_path), "r", ("t",), delta_tables=("t",)).resume_state()
+
+    os.remove(tmp_path / "r" / "manifest.json")  # a checkpoint from before layouts were recorded
+    delta = FoldCheckpointer(spark, str(tmp_path), "r", ("t",), delta_tables=("t",))
+    with pytest.raises(ValueError, match="no manifest.json"):
+        delta.resume_state()
+    with pytest.raises(ValueError, match="no manifest.json"):
+        delta.persist(2, t=spark.createDataFrame([(3,)], "a long"))
+    # full snapshots read back correctly whatever the manifest says
+    snap, nxt = FoldCheckpointer(spark, str(tmp_path), "r", ("t",)).resume_state()
+    assert nxt == 2 and sorted(r.a for r in snap["t"].collect()) == [1, 2]
+
+
+def test_stream_call_matches_unrolled_reference(spark):
+    """One n_batches=1 call onto preloaded state, as a refresh loop makes
+    it: labels equal the unrolled repair (new vertices as singletons,
+    touched communities disbanded in Python, 3 materialized keep_own
+    supersteps), the fused metrics row equals the separate metrics, and
+    the result outlives the released inputs."""
+    from sbm_communitydetection_spark.functions.metrics import modularity
+    from sbm_communitydetection_spark.operators.graph_ops import add_edges
+    from sbm_communitydetection_spark.operators.label_propagation import lpa_superstep
+    from sbm_communitydetection_spark.plans.iterate import unpersist_checkpoint
+
+    vertices, stream = generate_sbm(spark, n=40, k=2, m=300, p_in=0.9, p_out=0.05, seed=5)
+    raw = stream.select("src", "dst", F.lit(1).cast("long").alias("weight"), "edge_seq")
+    init_edges = symmetrize(raw.filter(F.col("edge_seq") < 150)).localCheckpoint(eager=True)
+    init_labels = (
+        init_edges.select(F.col("src").alias("id"))
+        .distinct()
+        .join(vertices.select("id", F.col("label").cast("long").alias("label")), "id")
+        .localCheckpoint(eager=True)
+    )
+    new_vertex = spark.createDataFrame(
+        [(1000, 0, 1, 150), (1000, 1, 1, 150), (1001, 1000, 1, 150)],
+        "src long, dst long, weight long, edge_seq long",
+    )
+    batch = raw.filter(F.col("edge_seq") >= 150).unionByName(new_vertex)
+
+    res = stream_community_detection(
+        spark, batch, n_batches=1, initial_edges=init_edges, initial_labels=init_labels
+    )
+
+    edges = add_edges(init_edges, batch.select("src", "dst", "weight")).localCheckpoint(eager=True)
+    init = {r.id: r.label for r in init_labels.collect()}
+    lab = {r.src: init.get(r.src, r.src) for r in edges.select("src").distinct().collect()}
+    pairs = [(r.src, r.dst) for r in batch.collect() if r.src != r.dst]
+    touched = {c for u, v in pairs if lab[u] != lab[v] for c in (lab[u], lab[v])}
+    assert touched and 1000 in lab  # the batch disbands and adds vertices
+    seed = {v: v if c in touched else c for v, c in lab.items()}
+    want = spark.createDataFrame(sorted(seed.items()), "id long, label long")
+    for _ in range(3):
+        want = lpa_superstep(edges, want, variant="keep_own").localCheckpoint(eager=True)
+    want_rows = sorted(map(tuple, want.collect()))
+
+    (row,) = res.metrics
+    assert row["edges_seen"] == int(edges.agg(F.sum("weight") / 2).collect()[0][0])
+    assert row["n_communities"] == want.select("label").distinct().count()
+    q = modularity(edges, want).collect()[0][0]
+    assert abs(row["modularity"] - q) <= 1e-12, (row["modularity"], q)
+
+    unpersist_checkpoint(init_edges)
+    unpersist_checkpoint(init_labels)
+    assert sorted(map(tuple, res.labels.collect())) == want_rows
+    assert sorted(map(tuple, res.edges.collect())) == sorted(map(tuple, edges.collect()))
